@@ -6,7 +6,12 @@ import scala.jdk.CollectionConverters._
 /** Dev tool: generate ATLAS.md — the operator atlas the repo needs now
   * that 200+ queries span ~50 files. One row per SparkEntry query:
   *
-  *   query -> implementing method -> file:line -> oracle family -> specs
+  *   query -> implementing method -> file -> oracle family -> specs
+  *
+  * Rows carry the file, not a line number: file plus method is
+  * greppable, and an edit above a query method then leaves the atlas
+  * fresh — it goes stale only when a registry, a binding or the set of
+  * specs citing a query changes.
   *
   * Sources of truth are the LIVE registries (SparkEntry.queries /
   * oracleSql at runtime) plus a lexical scan of the source tree for
@@ -43,27 +48,26 @@ object Atlas {
     val mainFiles = scalaFiles("src/main/scala")
     val testFiles = scalaFiles("src/test/scala")
 
-    // def-site index: method name -> ALL (file, line) sites across main
+    // def-site index: method name -> ALL files defining it across main
     // sources, first-seen order preserved per name
-    val defSites: Map[String, Vector[(String, Int)]] = {
+    val defSites: Map[String, Vector[String]] = {
       val defRe = """^\s*(?:private(?:\[\w+\])?\s+|final\s+)*def\s+([A-Za-z0-9_]+)""".r
-      val b = scala.collection.mutable.Map
-        .empty[String, Vector[(String, Int)]]
-      for (f <- mainFiles; (l, i) <- read(f).linesIterator.zipWithIndex)
+      val b = scala.collection.mutable.Map.empty[String, Vector[String]]
+      for (f <- mainFiles; l <- read(f).linesIterator)
         defRe.findFirstMatchIn(l).foreach { m =>
           b.updateWith(m.group(1)) {
-            case Some(v) => Some(v :+ ((f.toString, i + 1)))
-            case None => Some(Vector((f.toString, i + 1)))
+            case Some(v) => Some(v :+ f.toString)
+            case None => Some(Vector(f.toString))
           }
         }
       b.toMap
     }
     // a duplicate method name in an unrelated file must not mislabel a
-    // query's file:line (the r17 advice): prefer the def site whose
-    // file matches the binding's qualified OBJECT name
-    def defSiteFor(obj: String, method: String): Option[(String, Int)] =
+    // query's file (the r17 advice): prefer the def site whose file
+    // matches the binding's qualified OBJECT name
+    def defSiteFor(obj: String, method: String): Option[String] =
       defSites.get(method).flatMap { sites =>
-        sites.find(_._1.endsWith(s"/$obj.scala")).orElse(sites.headOption)
+        sites.find(_.endsWith(s"/$obj.scala")).orElse(sites.headOption)
       }
 
     // spec index: test files are read once; a query's specs are the
@@ -101,13 +105,12 @@ object Atlas {
         case Some(m) =>
           val obj = m.group(1).split('.').last
           defSiteFor(obj, m.group(2)) match {
-            case Some((f, ln)) => (s"$obj.${m.group(2)}", s"$f:$ln")
-            case None => ("inline", s"$entryPath:${bindIdx + 1}")
+            case Some(f) => (s"$obj.${m.group(2)}", f)
+            case None => ("inline", entryPath.toString)
           }
         case _ =>
-          // inline lambda: the query lives in SparkEntry itself; find a
-          // called graft method inside the binding region if any
-          ("inline", s"$entryPath:${bindIdx + 1}")
+          // inline lambda: the query lives in SparkEntry itself
+          ("inline", entryPath.toString)
       }
       val oracle = if (oracled.contains(name)) "hash" else "rows-only"
       val prefix = name.takeWhile(_ != '_')
@@ -126,7 +129,7 @@ object Atlas {
     sb ++= "Generated by `sbt \"runMain graft.Atlas\"` — do not edit by hand.\n"
     sb ++= s"${rows.size} queries; ${rows.count(_._4 == "hash")} hash-matched " +
       s"against the DuckDB oracle, ${rows.count(_._4 == "rows-only")} rows-only.\n\n"
-    sb ++= "| query | operator | file:line | oracle | specs |\n"
+    sb ++= "| query | operator | file | oracle | specs |\n"
     sb ++= "|---|---|---|---|---|\n"
     for ((name, method, site, oracle, specs) <- rows) {
       val specCell = if (specs.isEmpty) "—" else specs.take(4).mkString(", ") +

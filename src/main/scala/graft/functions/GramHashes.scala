@@ -20,7 +20,8 @@ object GramHashes {
 
   /** Every n-token gram's 64-bit md5-prefix hash, in gram order —
     * value-identical to
-    * `grams(tokenize(t), n).map(Dedup.gramHash64)` (tokens split on
+    * `grams(tokenize(lowerRoot(t)), n).map(Dedup.gramHash64)` (text
+    * lowercased under `Locale.ROOT`, see [[lowerRoot]]; tokens split on
     * single spaces, empties dropped, joined by single spaces; hash =
     * first 8 bytes of md5(utf-8(gram)), big-endian — the
     * oracle-reproducible `substr(md5(g), 1, 16)` identity), computed
@@ -32,7 +33,7 @@ object GramHashes {
     */
   def hashes(s: UTF8String, n: Int, distinct: Boolean, sorted: Boolean,
       wsSplit: Boolean): ArrayData = {
-    val all = s.getBytes
+    val all = lowerRoot(s)
     val nb = all.length
     // wsSplit replicates java regex \s+ = [ \t\n\x0B\f\r] (all
     // single-byte, so the byte walk stays UTF-8-safe); plain mode is
@@ -107,6 +108,26 @@ object GramHashes {
     new GenericArrayData(res)
   }
 
+  /** UTF-8 bytes of `s` lowercased under `Locale.ROOT`, never the JVM
+    * default locale: Spark's `lower()` lowercases non-ASCII text with
+    * `String.toLowerCase()`, which under a Turkish default locale maps
+    * `I` to dotless `ı` and `İ` to `i`. ASCII text takes a byte loop.
+    */
+  private def lowerRoot(s: UTF8String): Array[Byte] = {
+    val src = s.getBytes
+    val out = new Array[Byte](src.length)
+    var i = 0
+    while (i < src.length) {
+      val b = src(i)
+      if (b < 0) // non-ASCII: the full Unicode mapping
+        return s.toString.toLowerCase(java.util.Locale.ROOT)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      out(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+      i += 1
+    }
+    out
+  }
+
   /** `text`'s n-token gram hashes as a Column. */
   def of(text: org.apache.spark.sql.Column, n: Int,
       distinct: Boolean = false, sorted: Boolean = false,
@@ -119,7 +140,8 @@ object GramHashes {
 
 /** `gram_hashes(text, n[, distinct[, sorted]])`: every n-token gram's
   * 64-bit md5-prefix hash ([[graft.operators.Dedup.gramHash64]]'s
-  * oracle-reproducible identity), `array<long>` — the hashed sibling
+  * oracle-reproducible identity) over the `Locale.ROOT`-lowercased
+  * text, `array<long>` — the hashed sibling
   * of [[TokenWindows]]. Exists so the gram-hash document profiles of
   * the similarity family (all-pairs prefix filter, inverted index)
   * run as scan→project inside whole-stage codegen instead of a

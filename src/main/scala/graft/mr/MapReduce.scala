@@ -41,6 +41,13 @@ final case class KSV[+K, +S, +V](key: K, sort: S, value: V) extends Emit[K, S, V
   */
 class ElementCountError(msg: String) extends RuntimeException(msg)
 
+/** RDD-path shuffle payload of a [[KSV]] emission. A [[KV]] emission
+  * shuffles its bare value, so a payload is sort-carrying iff it is an
+  * instance of this class; user code cannot construct one, so no user
+  * value (`None`, `Some(_)`, a tuple, `null`) is ever mistaken for it.
+  */
+private[mr] final class SortedValue(val sort: Any, val value: Any) extends Serializable
+
 /** Shared machinery for the two reducer shapes.
   *
   * Semantics ported from `/root/reference/tinymr.py` (`MapReduce.__call__`,
@@ -69,6 +76,20 @@ class ElementCountError(msg: String) extends RuntimeException(msg)
   * with no Catalyst-visible schema, which is exactly the "genuine
   * per-partition imperative logic" case. All *analytic* operators live in
   * the DataFrame layer (`graft.operators`) where Catalyst can optimize.
+  *
+  * Shuffle payload (RDD path): a [[KV]] emission shuffles as the bare
+  * pair `(key, value)`; only a [[KSV]] emission wraps its value, as
+  * `(key, SortedValue(sort, value))`. The common unsorted record thus
+  * pays no envelope in Java serialization, and [[sortValues]] tells the
+  * two arities apart by the wrapper's class alone. The Dataset path
+  * keeps its encoded `(key, (Option[sort], value))` rows.
+  *
+  * Combiner (Dataset path): one path regardless of [[mapParallelism]].
+  * The mapper's own `mapPartitions` folds emissions per key in a hash
+  * map of at most [[MapReduceBase.CombineCap]] entries, emitting and
+  * clearing it whenever it fills, so map-side memory stays bounded
+  * however many distinct keys a partition holds. One keyed exchange
+  * then finishes the fold (see [[dsSizedGroups]]).
   */
 abstract class MapReduceBase[I, K, S, V] extends Serializable {
 
@@ -150,8 +171,9 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
 
   /** Optional commutative-associative combiner. When defined (and no
     * map-phase sort is requested) the map output is pre-combined per key
-    * map-side and merged with `reduceByKey`, so NO per-key value list is
-    * ever materialized — the framework-level form of the reference's
+    * map-side — `reduceByKey` on the RDD path, the bounded in-mapper
+    * fold on the Dataset path — so NO per-key value list is ever
+    * materialized: the framework-level form of the reference's
     * in-mapper-combining idiom (docs.rst:197-283), which it can only
     * express as user code. The reducer then receives a single
     * pre-combined value. Requires KV-only emissions (enforced): sort
@@ -202,27 +224,51 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     }
   }
 
-  /** Stable in-group sort per the S6 matrix; `buf` arrival order is kept
-    * for ties (Timsort, matching reference tinymr.py:336-343).
+  /** `e` as its RDD-path shuffle record: the bare `(key, value)` pair
+    * for a [[KV]], the value wrapped with its sort element for a [[KSV]].
+    */
+  protected def shuffled(e: Emit[K, S, V]): (K, Any) = e match {
+    case s: KSV[K, S, V] @unchecked => (s.key, new SortedValue(s.sort, s.value))
+    case _ => (e.key, e.value)
+  }
+
+  /** The user value inside a shuffled payload of either arity. */
+  protected def valueOf(p: Any): V = p match {
+    case s: SortedValue => s.value.asInstanceOf[V]
+    case v => v.asInstanceOf[V]
+  }
+
+  /** A Dataset-path record's payload in the form [[sortValues]] reads. */
+  private def payload(sv: SV): Any = sv._1 match {
+    case Some(s) => new SortedValue(s, sv._2)
+    case None => sv._2
+  }
+
+  /** Stable in-group sort per the S6 matrix over shuffled payloads;
+    * `buf` arrival order is kept for ties (Timsort, matching reference
+    * tinymr.py:336-343).
     */
   protected def sortValues(
-      buf: mutable.ArrayBuffer[SV], withValue: Boolean, reverse: Boolean): List[V] = {
-    val hasSort = buf.exists(_._1.isDefined)
+      buf: mutable.ArrayBuffer[Any], withValue: Boolean, reverse: Boolean): List[V] = {
+    val hasSort = buf.exists(_.isInstanceOf[SortedValue])
     // mixed KV/KSV under one key is malformed (the reference breaks on
     // mixed arities too, SURVEY §1.2) — fail with a clear error, not a
-    // deep-in-Timsort None.get
-    def sortOf(p: SV): S = p._1.getOrElse(throw new ElementCountError(
-      "mixed (key, value) and (key, sort, value) emissions within one key group"))
-    val ord: Ordering[SV] = (hasSort, withValue) match {
-      case (true, true)   => Ordering.by((p: SV) => (sortOf(p), p._2))(Ordering.Tuple2(sortOrdering, valueOrdering))
-      case (true, false)  => Ordering.by((p: SV) => sortOf(p))(sortOrdering)
-      case (false, true)  => Ordering.by((p: SV) => p._2)(valueOrdering)
+    // deep-in-Timsort ClassCastException
+    def sortOf(p: Any): S = p match {
+      case s: SortedValue => s.sort.asInstanceOf[S]
+      case _ => throw new ElementCountError(
+        "mixed (key, value) and (key, sort, value) emissions within one key group")
+    }
+    val ord: Ordering[Any] = (hasSort, withValue) match {
+      case (true, true)   => Ordering.by((p: Any) => (sortOf(p), valueOf(p)))(Ordering.Tuple2(sortOrdering, valueOrdering))
+      case (true, false)  => Ordering.by((p: Any) => sortOf(p))(sortOrdering)
+      case (false, true)  => Ordering.by((p: Any) => valueOf(p))(valueOrdering)
       case (false, false) => null // 2-tuples with no flags: no sort (docs.rst:300-307)
     }
     val sorted =
       if (ord == null) buf
       else buf.sorted(if (reverse) ord.reverse else ord)
-    sorted.iterator.map(_._2).toList
+    sorted.iterator.map(valueOf).toList
   }
 
   /** One shuffle + sort pass — reference `_partition_and_sort`
@@ -231,13 +277,12 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     * [[reduceParallelism]]); 0 = Spark default.
     */
   protected def partitionAndSort(
-      rdd: RDD[(K, SV)], withValue: Boolean, reverse: Boolean, partitions: Int)(
-      implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, List[V])] = {
-    implicit val svTag: ClassTag[SV] = ClassTag(classOf[Tuple2[_, _]]).asInstanceOf[ClassTag[SV]]
+      rdd: RDD[(K, Any)], withValue: Boolean, reverse: Boolean, partitions: Int)(
+      implicit kt: ClassTag[K]): RDD[(K, List[V])] = {
     val grouped =
       if (partitions > 0) rdd.groupByKey(partitions) else rdd.groupByKey()
     grouped.mapValues { it =>
-      val buf = mutable.ArrayBuffer.empty[SV]
+      val buf = mutable.ArrayBuffer.empty[Any]
       buf ++= it
       sortValues(buf, withValue, reverse)
     }
@@ -248,12 +293,11 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     * re-emits only its own key, so regrouping is partition-local.
     */
   protected def groupLocally(
-      rdd: RDD[(K, SV)], withValue: Boolean, reverse: Boolean)(
-      implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, List[V])] =
+      rdd: RDD[(K, Any)], withValue: Boolean, reverse: Boolean): RDD[(K, List[V])] =
     rdd.mapPartitions(
       it => {
-        val m = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[SV]]
-        it.foreach { case (k, sv) => m.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += sv }
+        val m = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[Any]]
+        it.foreach { case (k, p) => m.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += p }
         m.iterator.map { case (k, buf) => (k, sortValues(buf, withValue, reverse)) }
       },
       preservesPartitioning = true)
@@ -273,9 +317,8 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
           else mapped.reduceByKey(op)
         combined.mapValues(List(_))
       case _ =>
-        val mapped: RDD[(K, SV)] =
-          rdd.mapPartitions(part => instrumented(part)(i =>
-            mapper(i).iterator.map(e => (e.key, (e.sortOpt, e.value)))))
+        val mapped = rdd.mapPartitions(part =>
+          instrumented(part)(i => mapper(i).iterator.map(shuffled)))
         partitionAndSort(mapped, sortMapWithValue, sortMapReverse, mapPar)
     }
 
@@ -288,14 +331,15 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
   // compression all apply. The RDD path remains for opaque value types
   // (the reference's values are arbitrary objects, tinymr.py:73-76).
 
-  /** Sized keyed shuffle for the Dataset path: an explicit
-    * `repartition(parallelism, _1)` + in-partition sort on the encoded
-    * key makes equal keys contiguous, and a streaming adjacent-group
-    * fold then applies `f` per key group — one exchange of exactly the
-    * requested width, holding one group (not one partition) in memory
-    * at a time. A plain pre-`repartition` before `groupByKey` would NOT
-    * do this: the lambda key defeats exchange reuse and the groupByKey
-    * would just shuffle again.
+  /** Keyed shuffle for the Dataset path: a `repartition` on `_1` +
+    * in-partition sort on the encoded key makes equal keys contiguous,
+    * and a streaming adjacent-group fold then applies `f` per key group,
+    * holding one group (not one partition) in memory at a time.
+    * `parallelism` > 0 pins the exchange to exactly that width; 0 leaves
+    * it at `spark.sql.shuffle.partitions` for AQE to coalesce. A plain
+    * pre-`repartition` before `groupByKey` would NOT do this: the lambda
+    * key defeats exchange reuse and the groupByKey would just shuffle
+    * again.
     *
     * Key-equality caveat (same as the RDD path's HashPartitioner):
     * grouping relies on the key's Tungsten encoding being
@@ -308,8 +352,9 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     * (NaN != NaN) to match the groupByKey path's encoded-key grouping.
     */
   private def dsSizedGroups[O](ds: Dataset[(K, SV)], parallelism: Int)(
-      f: (K, mutable.ArrayBuffer[SV]) => O)(implicit eo: Encoder[O]): Dataset[O] =
-    ds.repartition(parallelism, col("_1"))
+      f: (K, mutable.ArrayBuffer[Any]) => O)(implicit eo: Encoder[O]): Dataset[O] =
+    (if (parallelism > 0) ds.repartition(parallelism, col("_1"))
+     else ds.repartition(col("_1")))
       .sortWithinPartitions(col("_1"))
       .mapPartitions { it =>
         new Iterator[O] {
@@ -318,11 +363,11 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
           def hasNext: Boolean = pending.isDefined
           def next(): O = {
             val (k, first) = pending.get
-            val buf = mutable.ArrayBuffer(first)
+            val buf = mutable.ArrayBuffer(payload(first))
             pending = None
             while (pending.isEmpty && it.hasNext) {
               val p = it.next()
-              if (keyEq(p._1, k)) buf += p._2 else pending = Some(p)
+              if (keyEq(p._1, k)) buf += payload(p._2) else pending = Some(p)
             }
             f(k, buf)
           }
@@ -363,8 +408,8 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     else
       ds.groupByKey(_._1)
         .flatMapGroups { (k: K, it: Iterator[(K, SV)]) =>
-          val buf = mutable.ArrayBuffer.empty[SV]
-          it.foreach(p => buf += p._2)
+          val buf = mutable.ArrayBuffer.empty[Any]
+          it.foreach(p => buf += payload(p._2))
           Iterator.single((k, sortValues(buf, withValue, reverse): Seq[V]))
         }
   }
@@ -374,9 +419,39 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
       ds: Dataset[(K, SV)], withValue: Boolean, reverse: Boolean)(
       implicit eout: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
     ds.mapPartitions { it =>
-      val m = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[SV]]
-      it.foreach { case (k, sv) => m.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += sv }
+      val m = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[Any]]
+      it.foreach { case (k, sv) => m.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += payload(sv) }
       m.iterator.map { case (k, buf) => (k, sortValues(buf, withValue, reverse): Seq[V]) }
+    }
+
+  /** The Dataset combiner's map side: folds one partition's emissions
+    * per key with `op` in a hash map of at most
+    * [[MapReduceBase.CombineCap]] entries, emitting and clearing the map
+    * whenever it fills. A key may thus come out more than once; the
+    * exchange after it finishes the fold.
+    */
+  private def combineBounded(it: Iterator[Emit[K, S, V]], op: (V, V) => V): Iterator[(K, SV)] =
+    new Iterator[(K, SV)] {
+      private val m = new java.util.HashMap[K, V]()
+      private var out = m.entrySet.iterator
+      def hasNext: Boolean = out.hasNext || {
+        m.clear()
+        while (m.size < MapReduceBase.CombineCap && it.hasNext) {
+          val e = it.next()
+          if (e.sortOpt.isDefined) throw new ElementCountError(
+            "combiner requires (key, value) emissions — (key, sort, value) has no combine semantics")
+          val old = m.get(e.key)
+          // null is a legal value: only containsKey tells a null from a miss
+          m.put(e.key, if (old != null || m.containsKey(e.key)) op(old, e.value) else e.value)
+        }
+        out = m.entrySet.iterator
+        out.hasNext
+      }
+      def next(): (K, SV) = {
+        if (!hasNext) throw new NoSuchElementException("combined partition exhausted")
+        val kv = out.next()
+        (kv.getKey, (None, kv.getValue))
+      }
     }
 
   protected def dsMapPhase(ds: Dataset[I], mapPar: Int = mapParallelism)(
@@ -384,39 +459,22 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
       eout: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
     combiner match {
       case Some(op) if !sortMapWithValue =>
-        val mapped = ds.mapPartitions { part =>
-          instrumented(part)(i => mapper(i).iterator.map { e =>
-            if (e.sortOpt.isDefined) throw new ElementCountError(
-              "combiner requires (key, value) emissions — (key, sort, value) has no combine semantics")
-            (e.key, (e.sortOpt, e.value))
-          })
+        val combined = ds.mapPartitions(part =>
+          combineBounded(instrumented(part)(i => mapper(i).iterator), op))
+        dsSizedGroups(combined, mapPar) { (k, buf) =>
+          (k, Seq(buf.view.map(valueOf).reduce(op)): Seq[V])
         }
-        if (mapPar > 0)
-          // sized variant keeps the map-side combine reduceGroups would
-          // have provided: fold each scan partition locally first, so
-          // the pinned-width exchange carries one row per (partition,
-          // key), then finish the fold per key group
-          dsSizedGroups(
-            mapped.mapPartitions { it =>
-              val m = mutable.LinkedHashMap.empty[K, V]
-              it.foreach { case (k, (_, v)) =>
-                m.update(k, m.get(k).fold(v)(op(_, v)))
-              }
-              m.iterator.map { case (k, v) => (k, (None: Option[S], v)) }
-            }, mapPar) { (k, buf) =>
-            (k, Seq(buf.view.map(_._2).reduce(op)): Seq[V])
-          }
-        else
-          mapped
-            .groupByKey(_._1)
-            .reduceGroups((a: (K, SV), b: (K, SV)) => (a._1, (None, op(a._2._2, b._2._2))))
-            .map { case (k, (_, (_, v))) => (k, Seq(v)) }
       case _ =>
         dsPartitionAndSort(
           ds.mapPartitions(part => instrumented(part)(i =>
             mapper(i).iterator.map(e => (e.key, (e.sortOpt, e.value))))),
           sortMapWithValue, sortMapReverse, mapPar)
     }
+}
+
+object MapReduceBase {
+  /** Entry cap of the Dataset combiner's per-partition hash map. */
+  private[mr] val CombineCap = 65536
 }
 
 /** Yield-mode task: the reducer emits 0..n records (reference generator
@@ -446,10 +504,8 @@ abstract class MapReduce[I, K, S, V] extends MapReduceBase[I, K, S, V] {
 
   final def run(rdd: RDD[I], mapPar: Int, reducePar: Int)(
       implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, List[V])] = {
-    val reduced: RDD[(K, SV)] = mapPhase(rdd, mapPar).mapPartitions(part =>
-      instrumented(part) { case (k, vs) =>
-        reducer(k, vs).iterator.map(e => (e.key, (e.sortOpt, e.value)))
-      })
+    val reduced = mapPhase(rdd, mapPar).mapPartitions(part =>
+      instrumented(part) { case (k, vs) => reducer(k, vs).iterator.map(shuffled) })
     if (keyPreserving) groupLocally(reduced, sortReduceWithValue, sortReduceReverse)
     else partitionAndSort(reduced, sortReduceWithValue, sortReduceReverse, reducePar)
   }
@@ -544,15 +600,12 @@ abstract class MapReduce1[I, K, S, V] extends MapReduceBase[I, K, S, V] {
 
   final def run(rdd: RDD[I], mapPar: Int, reducePar: Int)(
       implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, V)] = {
-    val reduced: RDD[(K, SV)] = mapPhase(rdd, mapPar).mapPartitions(part =>
-      instrumented(part) { case (k, vs) =>
-        val e = reducer(k, vs)
-        Iterator.single((e.key, (e.sortOpt, e.value)))
-      })
+    val reduced = mapPhase(rdd, mapPar).mapPartitions(part =>
+      instrumented(part) { case (k, vs) => Iterator.single(shuffled(reducer(k, vs))) })
     if (keyPreserving)
       // keys are unique per partition after shuffle #1, so no collision
       // and no regroup is possible — straight projection.
-      reduced.map { case (k, (_, v)) => (k, v) }
+      reduced.map { case (k, p) => (k, valueOf(p)) }
     else
       partitionAndSort(reduced, sortReduceWithValue, sortReduceReverse, reducePar)
         .mapValues(_.head)

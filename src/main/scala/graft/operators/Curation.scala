@@ -40,6 +40,23 @@ object Curation {
     */
   val BenchmarkMod = 97
 
+  /** Runs `body`, then waits for `side`, a job started concurrently
+    * with it. A failure of `body` wins: a failure of `side` is attached
+    * to it with `addSuppressed` instead of masking it, as a
+    * `finally side.join()` would. When `body` succeeds, a failure of
+    * `side` is thrown.
+    */
+  private[graft] def joiningAfter[T](side: java.util.concurrent.CompletableFuture[_])(
+      body: => T): T = {
+    val out = try body catch {
+      case t: Throwable =>
+        try side.join() catch { case j: Throwable => t.addSuppressed(j) }
+        throw t
+    }
+    side.join()
+    out
+  }
+
   private[graft] def tokenize(text0: String): Array[String] = {
     val text = if (text0 == null) "" else text0 // crash-free on null docs
     text.split(" ").filter(_.nonEmpty)
@@ -3147,9 +3164,8 @@ object Curation {
             planted.withColumn("b", lit(v.toLong))
               .write.partitionBy("b").mode("append").parquet(rawDir))
         }
-        try phase(s"q219 b$v: rewrite+sink merge")(
-          UpsertSink.merge(s, sinkDir, up, "doc_id", "v"))
-        finally appendDone.join()
+        joiningAfter(appendDone)(phase(s"q219 b$v: rewrite+sink merge")(
+          UpsertSink.merge(s, sinkDir, up, "doc_id", "v")))
         release()
         // cache lifecycle: the fused join cache (or, at v=0, bState
         // itself) backs prevState for ONE more batch; everything else

@@ -814,7 +814,8 @@ object Dedup {
     // built by the native gram_hashes kernel inside whole-stage
     // codegen (the former corpus-scale Dataset.map paid an encoder
     // barrier and per-window string allocation; GramHashesSpec pins
-    // value-equality incl. the lower + \s+ tokenization)
+    // value-equality incl. the Locale.ROOT lowercasing + \s+
+    // tokenization)
     // persist BEFORE the gram-free filter: a filter on the kernel's
     // alias would be pushed below the projection and evaluate the
     // kernel TWICE per row while the cache populates (the guide §4.4
@@ -822,8 +823,7 @@ object Dedup {
     // the q88 plan as gramhashes in both Filter and Project); filtered
     // on the CACHED column it is one size() probe per materialized row
     val docGrams = docs.select(col("doc_id"),
-        graft.functions.GramHashes.of(
-          lower(coalesce(col("text"), lit(""))), 3,
+        graft.functions.GramHashes.of(coalesce(col("text"), lit("")), 3,
           distinct = true, sorted = true, wsSplit = true).as("grams"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .filter(size(col("grams")) > 0) // gram-free docs match nothing
@@ -1050,8 +1050,7 @@ object Dedup {
     // unpersist in).
     val docGrams = Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.functions.GramHashes.of(
-          lower(coalesce(col("text"), lit(""))), 3,
+        graft.functions.GramHashes.of(coalesce(col("text"), lit("")), 3,
           distinct = true, wsSplit = true).as("grams"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 

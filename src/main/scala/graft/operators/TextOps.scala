@@ -599,7 +599,7 @@ object TextOps {
     val sg = Tables.documents(s, d)
       .select(col("source"),
         explode(graft.functions.GramHashes.of(
-          lower(coalesce(col("text"), lit(""))), 3)).as("gram"))
+          coalesce(col("text"), lit("")), 3)).as("gram"))
       .distinct()
       .persist() // sizes + both self-join sides read this one exchange
     val sizes = sg.groupBy(col("source")).agg(count(lit(1)).as("n"))

@@ -66,6 +66,25 @@ class GramHashesSpec extends SparkSpec {
     }
   }
 
+  test("the kernel lowercases under Locale.ROOT, not a Turkish default locale") {
+    // under tr-TR, String.toLowerCase() maps I to dotless ı and İ to i
+    // (Spark's lower() uses it for non-ASCII text); the kernel must keep
+    // the all-pairs tokenization's Locale.ROOT lowercasing
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      for (t <- Seq("ISTANBUL İzmir Iğdır", "DIŞ İÇ ıi Iİ", "TITLE I AND İ",
+          "résumé IN İSTANBUL", "ASCII ONLY TITLE"); n <- Seq(1, 2)) {
+        val got = Seq(Tuple1(t)).toDF("t")
+          .select(GramHashes.of(col("t"), n, wsSplit = true).as("h"))
+          .as[Seq[Long]].head()
+        val toks = t.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+        assert(got == Curation.grams(toks, n).map(Dedup.gramHash64).toSeq,
+          s"n=$n text='$t'")
+      }
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("random corpora property at the trigram grain") {
     val rnd = new scala.util.Random(977)
     val vocab = Vector("alpha", "beta", "gé", "dd", "中文", "x")

@@ -16,6 +16,16 @@ object CombinerTasks {
     override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
   }
 
+  /** Counts `item % keys`: the Dataset combiner's bounded map-side fold. */
+  final class ModCount(keys: Long, mapPar: Int) extends MapReduce1[Long, Long, Int, Long] {
+    def mapper(item: Long): IterableOnce[Emit[Long, Int, Long]] =
+      Iterator.single(KV(item % keys, 1L))
+    def reducer(key: Long, values: Seq[Long]): Emit[Long, Int, Long] =
+      KV(key, values.sum)
+    override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
+    override def mapParallelism: Int = mapPar
+  }
+
   final class BadCombiner extends MapReduce1[Int, Int, Int, Int] {
     def mapper(i: Int): IterableOnce[Emit[Int, Int, Int]] =
       Iterator.single(KSV(i, i, i))
@@ -38,6 +48,21 @@ class CombinerSpec extends SparkSpec {
       val got = new CombWordCount(kp)
         .runDataset(spark.createDataset(Text).repartition(3)).collect().toMap
       assert(got == Oracle)
+    }
+  }
+
+  for (mapPar <- Seq(0, 3)) {
+    test(s"Dataset combiner: one partition past the map cap counts exactly (mapParallelism=$mapPar)") {
+      import spark.implicits._
+      // more distinct keys than the cap, each key seen in several
+      // flushes of the map-side hash map
+      val keys = MapReduceBase.CombineCap + 7L
+      val n = 3L * MapReduceBase.CombineCap
+      val input = spark.range(0, n, 1, 1).as[Long]
+      assert(input.rdd.getNumPartitions == 1)
+      val got = new ModCount(keys, mapPar).runDataset(input).collect().toMap
+      val want = (0L until n).groupMapReduce(_ % keys)(_ => 1L)(_ + _)
+      assert(got.size == keys && got == want)
     }
   }
 

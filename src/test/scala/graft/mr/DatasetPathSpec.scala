@@ -94,6 +94,45 @@ class DatasetPathSpec extends SparkSpec {
     assert(sized.values.sum == 60L && sized.size == 6)
   }
 
+  test("Dataset combiner groups NaN and array keys like the non-combiner path") {
+    import spark.implicits._
+    def nanTask(comb: Boolean, par: Int) = new MapReduce1[Double, Double, Int, Long] {
+      def mapper(item: Double): IterableOnce[Emit[Double, Int, Long]] =
+        Iterator.single(KV(item, 1L))
+      def reducer(key: Double, values: Seq[Long]): Emit[Double, Int, Long] =
+        KV(key, values.sum)
+      override def combiner: Option[(Long, Long) => Long] =
+        if (comb) Some(_ + _) else None
+      override def mapParallelism: Int = par
+    }
+    def arrayTask(comb: Boolean, par: Int) = new MapReduce1[Int, Array[Int], Int, Long] {
+      def mapper(item: Int): IterableOnce[Emit[Array[Int], Int, Long]] =
+        Iterator.single(KV(Array(item % 2, item % 3), 1L))
+      def reducer(key: Array[Int], values: Seq[Long]): Emit[Array[Int], Int, Long] =
+        KV(key, values.sum)
+      override def combiner: Option[(Long, Long) => Long] =
+        if (comb) Some(_ + _) else None
+      override def mapParallelism: Int = par
+    }
+    val nans = spark.createDataset(
+      Seq(Double.NaN, 1.5, Double.NaN, 1.5, Double.NaN, Double.NaN)).repartition(3)
+    val ints = spark.createDataset(1 to 60).repartition(4)
+    def nanCounts(comb: Boolean, par: Int): Map[Long, Long] =
+      nanTask(comb, par).runDataset(nans).collect()
+        .map { case (k, v) => java.lang.Double.doubleToLongBits(k) -> v }.toMap
+    def arrayCounts(comb: Boolean, par: Int): Map[List[Int], Long] =
+      arrayTask(comb, par).runDataset(ints).collect()
+        .map { case (k, v) => k.toList -> v }.toMap
+    val nanRef = nanCounts(comb = false, 0)
+    val arrayRef = arrayCounts(comb = false, 0)
+    assert(nanRef(java.lang.Double.doubleToLongBits(Double.NaN)) == 4L)
+    assert(arrayRef.size == 6 && arrayRef.values.sum == 60L)
+    for (par <- Seq(0, 3)) {
+      assert(nanCounts(comb = true, par) == nanRef, s"NaN keys, mapParallelism=$par")
+      assert(arrayCounts(comb = true, par) == arrayRef, s"array keys, mapParallelism=$par")
+    }
+  }
+
   test("Dataset combiner path honors mapParallelism and stays result-identical") {
     import spark.implicits._
     import WordCountTasks.{Oracle, Text}

@@ -42,6 +42,17 @@ object LifecycleTasks {
       KV(key, values.sum)
   }
 
+  /** Re-emits every value under a new key, so each crosses both
+    * shuffles as a bare `(key, value)` record.
+    */
+  final class EchoValues extends MapReduce[Any, Int, Int, Any] {
+    override def numPartitions: Int = 1
+    def mapper(item: Any): IterableOnce[Emit[Int, Int, Any]] =
+      Iterator.single(KV(0, item))
+    def reducer(key: Int, values: Seq[Any]): IterableOnce[Emit[Int, Int, Any]] =
+      values.iterator.map(v => KV(1, v))
+  }
+
   final class UntypedWordCount extends UntypedMapReduce[String] {
     def untypedMapper(item: String): IterableOnce[Product] =
       item.toLowerCase.split("\\s+").iterator.map(w => (w, 1))
@@ -121,6 +132,15 @@ class LifecycleSpec extends SparkSpec {
     assert(task.mapParallelism == 0 && task.reduceParallelism == 0)
     // a later default run still uses the Spark-default widths
     assert(task.runToMap(data) == task.runToMap(data, 5))
+  }
+
+  test("KV values shaped like options, tuples or null cross both shuffles unchanged") {
+    // the RDD path shuffles a KV value bare, so nothing about the value
+    // may be read as a sort element
+    val values: Seq[Any] = Seq(None, Some(1), Some(None), (None, 2),
+      (Some(3), "x"), null, Some(null), (1, 2, 3), "plain")
+    val got = new EchoValues().runToMap(sc.parallelize(values, 1))
+    assert(got == Map(1 -> values.toList))
   }
 
   test("version surface mirrors the reference packaging contract") {

@@ -95,6 +95,34 @@ object SortingTasks {
   }
 }
 
+object PayloadTasks {
+
+  /** Sort elements over values shaped like the engine's old envelope:
+    * the map phase sorts by index, the reducer re-emits each value with
+    * a descending sort element, and shuffle #2 sorts by that.
+    */
+  final class SortedOddValues extends MapReduce[(Int, Any), Int, Int, Any] {
+    override def numPartitions: Int = 1
+    override def sortOrdering: Ordering[Int] = Ordering.Int
+    def mapper(item: (Int, Any)): IterableOnce[Emit[Int, Int, Any]] =
+      Iterator.single(KSV(0, item._1, item._2))
+    def reducer(key: Int, values: Seq[Any]): IterableOnce[Emit[Int, Int, Any]] =
+      values.iterator.zipWithIndex.map { case (v, i) => KSV(1, -i, v) }
+  }
+
+  /** Mixes `(key, value)` and `(key, sort, value)` under one key, in the
+    * map phase or in the reduce phase.
+    */
+  final class MixedArity(inReducer: Boolean) extends MapReduce[Int, Int, Int, Int] {
+    override def numPartitions: Int = 1
+    override def sortOrdering: Ordering[Int] = Ordering.Int
+    def mapper(i: Int): IterableOnce[Emit[Int, Int, Int]] =
+      Iterator.single(if (!inReducer && i % 2 == 0) KSV(0, i, i) else KV(0, i))
+    def reducer(key: Int, values: Seq[Int]): IterableOnce[Emit[Int, Int, Int]] =
+      values.iterator.map(v => if (inReducer && v % 2 == 0) KSV(1, v, v) else KV(1, v))
+  }
+}
+
 class SortingSpec extends SparkSpec {
   import SortingTasks._
 
@@ -135,6 +163,24 @@ class SortingSpec extends SparkSpec {
       val shuffled = new Random(7).shuffle(dates)
       val got = new ComplexSort(sortedDays, rev).runToMap(sc.parallelize(shuffled, 1))
       assert(got(0) == sortedDays)
+    }
+  }
+
+  test("sorted values shaped like options, tuples or null survive both shuffles") {
+    val values: Seq[Any] = Seq(None, Some(1), null, (Some(2), "y"), Some(None))
+    val shuffled = new Random(3).shuffle(values.zipWithIndex.map(_.swap))
+    val got = new PayloadTasks.SortedOddValues().runToMap(sc.parallelize(shuffled, 1))
+    assert(got == Map(1 -> values.reverse.toList))
+  }
+
+  for (inReducer <- Seq(false, true)) {
+    val phase = if (inReducer) "reduce" else "map"
+    test(s"mixed (key, value) and (key, sort, value) under one key raise ElementCountError ($phase phase)") {
+      val e = intercept[org.apache.spark.SparkException] {
+        new PayloadTasks.MixedArity(inReducer).runToMap(sc.parallelize(1 to 6, 1))
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ElementCountError]), s"no ElementCountError in: $e")
     }
   }
 }
